@@ -140,7 +140,7 @@ def hits_q(ckpt: bool):
         "src", F.lit(_UNIT).cast("bigint").alias("hu")
     ).localCheckpoint()
     auth = None
-    iters, checkpoint_every = 5, 2
+    iters = 5
     for it in range(iters):
         a_raw = (
             e_src.join(hub, "src")
@@ -162,9 +162,7 @@ def hits_q(ckpt: bool):
         hub = h_raw.crossJoin(F.broadcast(h_max)).select(
             "src", F.expr(norm).alias("hu")
         )
-        if checkpoint_every and it != iters - 1 and (
-            it % checkpoint_every == checkpoint_every - 1
-        ):
+        if it % 2 == 1 and it != iters - 1:
             hub = hub.localCheckpoint()
     e_src.unpersist()
     e_dst.unpersist()

@@ -24,30 +24,24 @@ bit-identical at any parallelism and in any engine — the registered
 query carries a full unrolled-CTE DuckDB hash oracle.
 
 Scale notes (100 TB posture, mirrors pagerank.py):
-- the edge list is cached pre-partitioned once per join side; every
-  round reuses the two shuffle layouts;
-- the per-round max is a 1-row aggregate crossJoin-broadcast — it
+- both half-round directions live in ONE cached edge layout keyed on
+  the sending node, so every half-round is the same step over one
+  frame of raw sums, run through ``operators/iterate.py`` (lazy
+  checkpoint per half-round, no lineage stacking); each raw frame is
+  read twice (max and normalize) from its checkpoint;
+- the per-half-round max is a 1-row aggregate crossJoin-broadcast — it
   stays INSIDE the plan (no driver-side collect in the loop);
-- fixed iteration count, scores localCheckpoint'ed per round — no
-  lineage stacking, zero driver decisions in the loop;
+- fixed iteration count, zero driver decisions in the loop;
 - integer sums are order-independent, so AQE/skew-split re-plans
   cannot change the result.
-
-Retention note (ADVICE r16): the lazily-checkpointed frames created
-here (the deduped edge list, the per-half-round raw sums) are NOT
-unpersisted before return — the consuming action runs after this
-function returns (the query-builder contract), so no caller boundary
-exists inside it. The blocks are score/edge-sized, bounded per query,
-and evicted LRU by the block manager; a long-lived session that wants
-them gone eagerly can unpersist the returned frame's lineage or cycle
-the session. The explicit persist() layers (e_src/e_dst) ARE released
-before return.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from tda596_lab02mapreduce_spark.operators.iterate import iterate
 
 __all__ = ["hits"]
 
@@ -60,7 +54,6 @@ def hits(
     dst: str = "dst",
     *,
     iters: int = 5,
-    checkpoint_every: int = 2,
 ) -> DataFrame:
     """Run ``iters`` HITS rounds on the directed edge list.
 
@@ -77,76 +70,61 @@ def hits(
     # product (safe while max_degree < 1e6 even in bigint, unbounded
     # in decimal). Same integers either way — the r9 tuning measured
     # DECIMAL sums as the single largest cost (14.8 s → 11 s at
-    # sf0.1 after this + the raw-frame checkpoint below).
+    # sf0.1, together with checkpointing the raw sums).
     norm = f"CAST((CAST({_UNIT} AS DECIMAL(38,0)) * s) div m AS BIGINT)"
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct()
-    # Materialize the deduped edge list ONCE before deriving the two
-    # layouts: each persist() below triggers its own materialization
-    # job, and without the checkpoint both jobs re-ran the full
-    # upstream join + distinct (optimization r16, guide §1.2 — jobs do
-    # not share un-materialized subplans).
+    # Materialize the deduped edge list ONCE: both the layout below and
+    # the initial hubs read it, and jobs do not share un-materialized
+    # subplans (optimization r16, guide §1.2).
     e = e.localCheckpoint(eager=False)
-    # Two cached layouts, one per join direction: irrelevant while the
-    # score side broadcasts (fixture scale), load-bearing at the scale
-    # where it doesn't — the SMJ then reuses the edge layout instead
-    # of re-exchanging the full edge list every half-round.
-    e_src = e.repartition("src").persist()
-    e_dst = e.repartition("dst").persist()
-    hub = e_src.select("src").distinct().select(
-        "src", F.lit(_UNIT).cast("bigint").alias("hu")
-    ).localCheckpoint()
-    auth = None
-    for it in range(iters):
-        # the raw sums are referenced TWICE (max branch + normalize
-        # branch): without the checkpoint the join+agg would run twice
-        # per half-round (measured — the other half of the r9 tuning)
-        a_raw = (
-            e_src.join(hub, "src")
-            .groupBy("dst")
-            .agg(F.sum("hu").alias("s"))
-            .localCheckpoint(eager=False)
+    # Both half-round directions in ONE layout keyed on the sending
+    # node: a hub row (hub, s) sends along s→d to (auth, d), an
+    # authority row (auth, d) sends back along s→d to (hub, s).
+    fan = (
+        e.select(
+            F.lit("hub").alias("node_type"),
+            F.col("src").alias("node_id"),
+            F.lit("auth").alias("to_type"),
+            F.col("dst").alias("to_id"),
         )
-        a_max = a_raw.agg(F.max("s").alias("m"))
-        auth = a_raw.crossJoin(F.broadcast(a_max)).select(
-            "dst", F.expr(norm).alias("au")
+        .unionByName(
+            e.select(
+                F.lit("auth").alias("node_type"),
+                F.col("dst").alias("node_id"),
+                F.lit("hub").alias("to_type"),
+                F.col("src").alias("to_id"),
+            )
         )
-        h_raw = (
-            e_dst.join(auth.withColumnRenamed("au", "hu"), "dst")
-            .groupBy("src")
-            .agg(F.sum("hu").alias("s"))
-            .localCheckpoint(eager=False)
+        .repartition("node_type", "node_id")
+        .persist()
+    )
+
+    def scores(raw: DataFrame) -> DataFrame:
+        m = raw.agg(F.max("s").alias("m"))
+        return raw.crossJoin(F.broadcast(m)).select(
+            "node_type", "node_id", F.expr(norm).alias("score_u")
         )
-        h_max = h_raw.agg(F.max("s").alias("m"))
-        hub = h_raw.crossJoin(F.broadcast(h_max)).select(
-            "src", F.expr(norm).alias("hu")
+
+    def half(raw: DataFrame) -> DataFrame:
+        return (
+            fan.join(scores(raw), ["node_type", "node_id"])
+            .groupBy(
+                F.col("to_type").alias("node_type"), F.col("to_id").alias("node_id")
+            )
+            .agg(F.sum("score_u").alias("s"))
         )
-        # eager hub checkpoint every 2 rounds (round-10 sweep, the
-        # pagerank-cadence method applied per VERDICT r9 #2, measured
-        # at sf0.1: per-half-round-only lazy checkpoints 8.8-10.6 s,
-        # score cadence 1 → 6.3-6.7 s, cadence 2 → 6.3-6.6 s, cadence
-        # 3 → 6.0-7.0 s, no cadence with unhinted max 7.5-19.8 s
-        # (unstable: the chained 2-joins-per-half-round plan stacks).
-        # Cadence 2 picked as the stable optimum; like pagerank, the
-        # bounded lineage also caps lost-partition recompute at
-        # cluster scale. Placement is semantics-free (pure integer
-        # plan — sweep hashes all agreed).
-        if checkpoint_every and it != iters - 1 and (
-            it % checkpoint_every == checkpoint_every - 1
-        ):
-            hub = hub.localCheckpoint()
-    e_src.unpersist()
-    e_dst.unpersist()
-    return hub.select(
+
+    # hubs start at 1e6: a raw sum of 1 everywhere normalizes to it
+    raw = e.select(
         F.lit("hub").alias("node_type"),
         F.col("src").alias("node_id"),
-        F.col("hu").cast("bigint").alias("score_u"),
-    ).unionByName(
-        auth.select(
-            F.lit("auth").alias("node_type"),
-            F.col("dst").alias("node_id"),
-            F.col("au").cast("bigint").alias("score_u"),
-        )
-    )
+        F.lit(1).cast("bigint").alias("s"),
+    ).distinct().localCheckpoint()
+    # the last two half-rounds are the outputs: authorities, then hubs
+    a_raw = iterate(raw, half, 2 * iters - 1)
+    h_raw = iterate(a_raw, half, 1)
+    fan.unpersist()
+    return scores(h_raw).unionByName(scores(a_raw))
 
 
 def hits_oracle_sql(edge_cte: str, iters: int = 5) -> str:

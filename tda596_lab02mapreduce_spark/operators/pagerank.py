@@ -36,9 +36,14 @@ Scale notes (100 TB posture, mirrors components.py):
   so every round reuses one shuffle layout;
 - degrees are computed once and carried WITH the rank rows (joined a
   single time up front), so each round is join+agg, not join+join;
-- ranks are ``localCheckpoint``ed per round — no lineage stacking;
+- ranks are eagerly ``localCheckpoint``ed every third round (the
+  measured cadence; see the loop) — no lineage stacking;
 - a fixed iteration count means zero driver-side convergence actions
   in the loop.
+
+Personalized PageRank is the same update with a per-node restart mass
+in place of the uniform (1-d): pass ``base`` as ``(id, base_u)`` rows
+in 1e-6 units (ppr_seeded_related_parts pays it only to seed nodes).
 """
 
 from __future__ import annotations
@@ -56,9 +61,9 @@ def pagerank(
     *,
     iters: int = 10,
     damping: float = 0.85,
+    base: DataFrame | None = None,
     id_out: str = "id",
     rank_out: str = "rank",
-    checkpoint_every: int = 3,
 ) -> DataFrame:
     """Rank nodes of an undirected edge list by power iteration.
 
@@ -67,7 +72,9 @@ def pagerank(
     Singletons are absent by construction (their rank is the constant
     ``1 - damping``); callers union them back for total coverage.
     Every node present has degree >= 1, so there are no dangling-mass
-    corrections to apply.
+    corrections to apply. ``base`` (optional, ``(id, base_u)``)
+    replaces the uniform restart mass (1-d) with a per-node one in
+    1e-6 units; nodes absent from it get none.
     """
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     sym = e.unionByName(
@@ -76,25 +83,29 @@ def pagerank(
     sym = sym.repartition("src").persist()
 
     deg = sym.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    # the RECEIVER's degree rides on the edge list (joined once, before
-    # the loop): each round is then a single join + single aggregate —
-    # the rank update happens inside the aggregate's grouping keys
-    # instead of a second per-round join against the state frame
-    sym_d = (
-        sym.join(
-            deg.select(F.col("src").alias("dst"), F.col("deg").alias("dst_deg")),
-            "dst",
-        )
-        .select("src", "dst", "dst_deg")
-        .repartition("src")
-        .persist()
-    )
     # damping must be expressible in hundredths so the update is pure
     # integer arithmetic (d_pct/100); 0.85 -> 85
     d_pct = round(damping * 100)
     if abs(d_pct / 100.0 - damping) > 1e-12:
         raise ValueError(f"damping must be a multiple of 0.01, got {damping}")
-    base_u = (100 - d_pct) * 10_000  # (1-d) in 1e-6 micro-units
+    # the RECEIVER's degree and restart mass ride on the edge list
+    # (joined once, before the loop): each round is then a single
+    # join + single aggregate — the rank update happens inside the
+    # aggregate's grouping keys instead of a second per-round join
+    # against the state frame
+    recv = deg.select(F.col("src").alias("dst"), F.col("deg").alias("dst_deg"))
+    if base is None:
+        # uniform (1-d) in 1e-6 micro-units: a literal grouping key,
+        # which the optimizer drops from the aggregate
+        restart = F.lit((100 - d_pct) * 10_000).cast("bigint")
+    else:
+        recv = recv.join(
+            base.select(F.col("id").alias("dst"), F.col("base_u").alias("dst_base")),
+            "dst",
+            "left",
+        )
+        restart = F.coalesce(F.col("dst_base"), F.lit(0)).cast("bigint")
+    sym_d = sym.join(recv, "dst").repartition("src").persist()
 
     # (id, deg, rank_u) rides as one frame: one up-front join, none in
     # the loop; rank_u is the rank in exact 1e-6 integer units.
@@ -115,40 +126,36 @@ def pagerank(
                 ),
                 "src",
             )
-            .groupBy(F.col("dst").alias("id"), F.col("dst_deg").alias("deg"))
+            .groupBy(
+                F.col("dst").alias("id"),
+                F.col("dst_deg").alias("deg"),
+                restart.alias("base_u"),
+            )
             .agg(F.sum("share_e8").alias("in_mass_e8"))
             .select(
                 "id",
                 "deg",
-                # rank' = (1-d) + d·in_mass, half-up back to 1e-6 units
+                "base_u",
+                # rank' = restart + d·in_mass, half-up back to 1e-6 units
                 (
-                    F.lit(base_u).cast("bigint")
+                    F.col("base_u")
                     + F.expr(
                         f"(2 * {d_pct} * in_mass_e8 + 10000) div 20000"
                     )
                 ).alias("rank_u"),
             )
         )
-        # checkpoint cadence (round-9 sweep, VERDICT r8 #4, measured at
-        # sf0.1 on pre-checkpointed edges): every round 8.1 s, cadence
-        # 2 → 4.1-5.1 s, cadence 3 → 3.6-4.6 s, cadence 5 → 4.2 s, and
-        # the fully-chained single job (checkpoint_every=0) LOST at
-        # 6.9 s — a 10-layer join+agg plan pays more in optimizer/
-        # codegen than it saves in job scheduling (negative result,
-        # recorded in BASELINE.md).  Default 3: near the fixture
-        # optimum, and lineage depth ≤ 3 joins also bounds the
-        # recompute cost of a lost partition at cluster scale.
-        # Results are independent of checkpoint placement (pure
+        # Eager checkpoint every third round and after the last, NOT
+        # the per-round lazy policy of operators/iterate.py: a pagerank
+        # round is cheap, so per-checkpoint execution overhead
+        # dominates. Round-9 sweep at sf0.1: every round 8.1 s,
+        # cadence 2 4.1-5.1 s, cadence 3 3.6-4.6 s, one fully chained
+        # plan 6.9 s. Fresh-JVM runs at sf0.1, local[4]: iterate()
+        # 8.76/7.95/7.91/6.59 s against 6.68/7.19/7.00/5.53 s for this
+        # loop. Results are independent of checkpoint placement (pure
         # integer plan).
-        if checkpoint_every and (
-            it % checkpoint_every == checkpoint_every - 1 or it == iters - 1
-        ):
+        if it % 3 == 2 or it == iters - 1:
             state = state.localCheckpoint()
-    if not checkpoint_every:
-        # one eager materialization of the whole chained plan — the
-        # single job that replaces 10 per-round jobs — so the caches
-        # can be released before returning
-        state = state.localCheckpoint()
     sym.unpersist()
     sym_d.unpersist()
     return state.select(

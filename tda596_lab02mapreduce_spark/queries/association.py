@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 
 from tda596_lab02mapreduce_spark import io
 from tda596_lab02mapreduce_spark.functions.text import ngram_shingles, tokens_nonempty
+from tda596_lab02mapreduce_spark.operators.iterate import iterate
 from tda596_lab02mapreduce_spark.registry import register
 
 _MIN_SUPPORT = 5
@@ -530,10 +531,10 @@ def _hits_oracle() -> str:
         "iteration is bit-identical in both engines and the oracle is "
         "the full unrolled-CTE replay (the pagerank_neardup_hubs "
         "discipline, operators/hits.py). Plan per round: two keyed "
-        "join+agg shuffles on cached pre-partitioned edges plus 1-row "
-        "max broadcasts that stay inside the plan; fixed rounds, "
-        "localCheckpoint per half-round, zero driver actions in the "
-        "loop."
+        "join+agg shuffles on one cached two-direction edge layout "
+        "plus 1-row max broadcasts that stay inside the plan; fixed "
+        "rounds, half-rounds through operators/iterate.py, zero "
+        "driver actions in the loop."
     ),
     tags=("graph", "analytics", "join", "agg"),
 )
@@ -595,9 +596,9 @@ SELECT 'part', dst, CAST(count(*) AS BIGINT) FROM e{rounds} GROUP BY dst
         "rounds). Output: surviving nodes with their round-5 degrees, "
         "all exact integers, full unrolled-CTE hash oracle. Plan per "
         "round: two count aggregates + two semi-join-shaped filters, "
-        "all keyed shuffles on the edge endpoints; edges "
-        "localCheckpoint per round — no lineage stacking, no driver "
-        "decisions in the loop."
+        "all keyed shuffles on the edge endpoints; rounds run through "
+        "operators/iterate.py (lazy per-round checkpoint, no driver "
+        "decisions in the loop)."
     ),
     tags=("graph", "analytics", "agg", "join"),
 )
@@ -611,26 +612,21 @@ def kcore_peel_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .localCheckpoint()
     )
-    for _ in range(rounds):
+
+    def peel(e: DataFrame) -> DataFrame:
         ds = e.groupBy("src").agg(F.count(F.lit(1)).alias("c_s")).filter(
             F.col("c_s") >= k
         )
         dd = e.groupBy("dst").agg(F.count(F.lit(1)).alias("c_d")).filter(
             F.col("c_d") >= k
         )
-        # LAZY per-round checkpoints (optimization r17, guide §1.2
-        # fewer jobs): the loop has no in-loop actions, so eager
-        # checkpoints were 5 standalone materialization jobs; lazily
-        # marked, each round materializes once inside the final action
-        # with identical plan truncation. Fresh-JVM A/B at sf0.1
-        # (bench's isolated protocol, 3 cold runs each): eager
-        # 3.89/3.48/3.50 s vs lazy 3.42/3.09/3.40 s — lazy 3/3.
-        e = (
+        return (
             e.join(ds.select("src"), "src")
             .join(dd.select("dst"), "dst")
             .select("src", "dst")
-            .localCheckpoint(eager=False)
         )
+
+    e = iterate(e, peel, rounds)
     return (
         e.groupBy("src")
         .agg(F.count(F.lit(1)).alias("deg"))
@@ -717,7 +713,7 @@ JOIN (SELECT lbl, CAST(count(*) AS BIGINT) AS community_size
         "per round: one edge-label join + one (dst, lbl) count + one "
         "dst-keyed argmax aggregate (max_by on a (cnt, -lbl) struct — "
         "total order, no window); edges cached pre-partitioned, "
-        "labels localCheckpoint per round."
+        "rounds through operators/iterate.py."
     ),
     tags=("graph", "analytics", "agg", "join"),
 )
@@ -740,17 +736,17 @@ def community_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     lab = e.select(F.col("src").alias("id")).distinct().select(
         "id", F.col("id").alias("lbl")
     ).localCheckpoint()
-    for _ in range(rounds):
-        lab = (
+
+    def propagate(lab: DataFrame) -> DataFrame:
+        return (
             e.join(lab.withColumnRenamed("id", "src"), "src")
             .groupBy(F.col("dst"), F.col("lbl"))
             .agg(F.count(F.lit(1)).alias("cnt"))
             .groupBy(F.col("dst").alias("id"))
-            .agg(
-                F.expr("max_by(lbl, struct(cnt, -lbl))").alias("lbl")
-            )
-            .localCheckpoint()
+            .agg(F.expr("max_by(lbl, struct(cnt, -lbl))").alias("lbl"))
         )
+
+    lab = iterate(lab, propagate, rounds)
     e.unpersist()
     sizes = lab.groupBy("lbl").agg(
         F.count(F.lit(1)).cast("bigint").alias("community_size")
@@ -993,19 +989,20 @@ def _copurchase_edges(
     # instead of two, and the per-pair struct allocation disappears
     # from the emission loop. Measured at sf0.1 (warmed in-session A/B,
     # 2 rounds): pair count 3.16→2.96 s and 3.06→2.54 s. The pack is
-    # exact only while every partkey < 2^31; since pks is sorted
-    # ascending and x < y within a pair, guarding y alone covers both —
-    # a catalog past 2^31 parts raises loudly (the _EXACT_KEY_MAX_N
-    # discipline) instead of silently colliding.
+    # exact only while every partkey is in [0, 2^31); since pks is
+    # sorted ascending and x < y within a pair, y >= 2^31 and x < 0
+    # together cover both ends for both keys — an out-of-range partkey
+    # raises loudly (the _EXACT_KEY_MAX_N discipline) instead of
+    # silently colliding.
     pairs = per_cust.repartition(max(8, par // 4)).select(
         F.explode(
             F.expr(
                 "flatten(transform(pks, (x, i) -> "
                 "transform(slice(pks, i + 2, size(pks)), "
-                "y -> CASE WHEN y >= 2147483648 THEN "
-                "CAST(raise_error('_copurchase_edges: partkey >= 2^31 "
-                "overflows the packed pair key — widen the pack before "
-                "scaling the catalog past 2^31 parts') AS BIGINT) "
+                "y -> CASE WHEN y >= 2147483648 OR x < 0 THEN "
+                "CAST(raise_error('_copurchase_edges: partkey outside "
+                "[0, 2^31) overflows the packed pair key — widen the "
+                "pack before scaling the catalog past 2^31 parts') AS BIGINT) "
                 "ELSE shiftleft(CAST(x AS BIGINT), 32) + y END)))"
             )
         ).alias("pp")
@@ -1052,94 +1049,48 @@ def _copurchase_edges(
         "half-up 1e-8 shares, integer damping update; seed base "
         "30000·|V| micro-units = (1-d)·|V|·1e6/5 exactly), so the "
         "unrolled MATERIALIZED-CTE oracle replays it bit-for-bit. "
-        "Plan per round: one state-edge join + one dst-keyed "
-        "aggregate; dst deg AND seed base ride the edge list (joined "
-        "once up front), state localCheckpoints at cadence 3 (the "
-        "pagerank sweep), seeds via TakeOrderedAndProject (never a "
-        "partition-less window)."
+        "It IS operators/pagerank.py with the seed base as its per-node "
+        "restart mass: one state-edge join + one dst-keyed aggregate "
+        "per round, pagerank's checkpoint cadence, seeds via "
+        "TakeOrderedAndProject (never a partition-less window)."
     ),
     tags=("graph", "analytics", "agg", "join"),
 )
 def ppr_seeded_related_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    rounds = 6
+    from tda596_lab02mapreduce_spark.operators.pagerank import pagerank
+
     e = _copurchase_edges(spark, sf_dir)
     deg = e.groupBy("src").agg(F.count(F.lit(1)).cast("bigint").alias("deg"))
     nv = deg.agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-    seeds = (
+    # restart mass (1-d)·|V|·1e6 split over the 5 seeds = 30000·|V|;
+    # checkpointed because pagerank and the is_seed join both read it
+    base = (
         deg.orderBy(F.desc("deg"), F.asc("src"))
         .limit(5)
-        .select(F.col("src").alias("id"), F.lit(1).alias("sfl"))
-    )
-    n0 = (
-        deg.select(F.col("src").alias("id"), "deg")
-        .join(F.broadcast(seeds), "id", "left")
         .crossJoin(F.broadcast(nv))
         .select(
-            "id",
-            "deg",
-            F.when(F.col("sfl") == 1, 30000 * F.col("n"))
-            .otherwise(F.lit(0))
-            .cast("bigint")
-            .alias("base_u"),
+            F.col("src").alias("id"),
+            (30000 * F.col("n")).cast("bigint").alias("base_u"),
         )
         .localCheckpoint()
     )
-    # dst's deg and seed base ride the edges: one up-front join, the
-    # loop is join+agg only (the pagerank shape)
-    sym_d = (
-        e.join(
-            n0.select(
-                F.col("id").alias("dst"),
-                F.col("deg").alias("dst_deg"),
-                F.col("base_u").alias("dst_base_u"),
-            ),
-            "dst",
-        )
-        .select("src", "dst", "dst_deg", "dst_base_u")
-        .repartition("src")
-        .persist()
+    # e holds both directions; pagerank takes each undirected pair once
+    ranks = pagerank(
+        e.filter(F.col("src") < F.col("dst")),
+        iters=6,
+        base=base,
+        id_out="part_id",
+        rank_out="ppr",
     )
-    state = n0.select(
-        "id", "deg", "base_u", F.lit(1_000_000).cast("bigint").alias("rank_u")
-    ).localCheckpoint()
-    for it in range(rounds):
-        state = (
-            sym_d.join(
-                state.select(
-                    F.col("id").alias("src"),
-                    F.expr("(200 * rank_u + deg) div (2 * deg)").alias("share_e8"),
-                ),
-                "src",
-            )
-            .groupBy(
-                F.col("dst").alias("id"),
-                F.col("dst_deg").alias("deg"),
-                F.col("dst_base_u").alias("base_u"),
-            )
-            .agg(F.sum("share_e8").alias("in_mass_e8"))
-            .select(
-                "id",
-                "deg",
-                "base_u",
-                (
-                    F.col("base_u")
-                    + F.expr("(170 * in_mass_e8 + 10000) div 20000")
-                )
-                .cast("bigint")
-                .alias("rank_u"),
-            )
-        )
-        if it % 3 == 2 or it == rounds - 1:
-            state = state.localCheckpoint()
     e.unpersist()
-    sym_d.unpersist()
-    return state.select(
-        F.col("id").alias("part_id"),
-        (F.col("rank_u").cast("double") / F.lit(1_000_000.0)).alias("ppr"),
-        F.when(F.col("base_u") > 0, F.lit(1))
-        .otherwise(F.lit(0))
-        .cast("bigint")
-        .alias("is_seed"),
+    return ranks.join(
+        F.broadcast(base.select(F.col("id").alias("part_id"), F.lit(1).alias("sfl"))),
+        "part_id",
+        "left",
+    ).select(
+        "part_id",
+        "ppr",
+        F.coalesce(F.col("sfl"), F.lit(0)).cast("bigint").alias("is_seed"),
     )
 
 
@@ -1208,50 +1159,20 @@ FROM d{rounds} WHERE dist IS NOT NULL
         "none yields a DISTANCE). 4 rounds = hops <= 4, the "
         "neighborhood radius a related-items UI actually renders. "
         "BFS monotonicity makes the update a COALESCE (a node's "
-        "first-reached round IS its final distance — no re-relaxation "
-        "like general Bellman-Ford), so state stays (id, nullable "
-        "dist) and the unrolled MATERIALIZED-CTE oracle replays the "
-        "rounds exactly: all-integer, no tie-break surface at all. "
-        "Plan per round: reached-frontier ⋈ pre-partitioned edges + "
-        "one dst-keyed MIN + a left join back to state, "
-        "localCheckpoint per round — the LPA plan with MIN for "
-        "argmax."
+        "first-reached round IS its final distance), which the "
+        "unrolled MATERIALIZED-CTE oracle replays exactly: "
+        "all-integer, no tie-break surface at all. It runs as "
+        "graph_weighted_cheapest's min-plus loop with unit weights "
+        "(seeds at 0 make LEAST(dist, offer) the first-reached "
+        "COALESCE); rounds through operators/iterate.py."
     ),
     tags=("graph", "analytics", "agg", "join"),
 )
 def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    rounds = 4
     e = _copurchase_edges(spark, sf_dir)
-    deg = e.groupBy("src").agg(F.count(F.lit(1)).cast("bigint").alias("deg"))
-    seeds = (
-        deg.orderBy(F.desc("deg"), F.asc("src"))
-        .limit(5)
-        .select(F.col("src").alias("id"), F.lit(0).cast("bigint").alias("s_dist"))
-    )
-    state = (
-        deg.select(F.col("src").alias("id"))
-        .join(F.broadcast(seeds), "id", "left")
-        .select("id", F.col("s_dist").alias("dist"))
-        .localCheckpoint()
-    )
-    for _ in range(rounds):
-        m = (
-            e.join(
-                state.filter(F.col("dist").isNotNull()).select(
-                    F.col("id").alias("src"), "dist"
-                ),
-                "src",
-            )
-            .groupBy(F.col("dst").alias("id"))
-            .agg((F.min("dist") + 1).alias("mind"))
-        )
-        state = (
-            state.join(m, "id", "left")
-            .select("id", F.coalesce(F.col("dist"), F.col("mind")).alias("dist"))
-            .localCheckpoint()
-        )
+    dist = _min_plus_from_hubs(e.withColumn("w", F.lit(1)), rounds=4)
     e.unpersist()
-    return state.filter(F.col("dist").isNotNull()).select(
+    return dist.select(
         F.col("id").alias("part_id"), F.col("dist").cast("bigint").alias("hops")
     )
 
@@ -1334,14 +1255,27 @@ FROM d{rounds} WHERE dist < {_SSSP_INF}
         "of nullable state (LEAST/COALESCE shapes identical in both "
         "engines), zero tie-break surface. Plan per round: frontier "
         "join on pre-partitioned weighted edges + one dst-keyed MIN + "
-        "a left join back, localCheckpoint each round — the BFS plan "
-        "with (dist + w) relaxation."
+        "a left join back, rounds through operators/iterate.py — the "
+        "loop graph_bfs_hops runs with unit weights."
     ),
     tags=("graph", "analytics", "agg", "join"),
 )
 def graph_weighted_cheapest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    rounds = 4
     e = _copurchase_edges(spark, sf_dir, with_weight=True)
+    dist = _min_plus_from_hubs(e, rounds=4)
+    e.unpersist()
+    return dist.select(
+        F.col("id").alias("part_id"), F.col("dist").cast("bigint").alias("cost_u")
+    )
+
+
+def _min_plus_from_hubs(e: DataFrame, rounds: int) -> DataFrame:
+    """Bounded-round min-plus relaxation over ``e(src, dst, w)`` from
+    the 5 highest-degree nodes: ``(id, dist)`` for every node reached
+    over paths of <= ``rounds`` edges. Shared by graph_bfs_hops (w = 1:
+    with seeds at 0 a node's first-reached round is its least distance,
+    so LEAST(dist, offer) is BFS's first-reached COALESCE) and
+    graph_weighted_cheapest."""
     deg = e.groupBy("src").agg(F.count(F.lit(1)).cast("bigint").alias("deg"))
     seeds = (
         deg.orderBy(F.desc("deg"), F.asc("src"))
@@ -1357,7 +1291,8 @@ def graph_weighted_cheapest(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint()
     )
-    for _ in range(rounds):
+
+    def relax(state: DataFrame) -> DataFrame:
         m = (
             e.join(
                 state.filter(F.col("dist") < _SSSP_INF).select(
@@ -1368,20 +1303,14 @@ def graph_weighted_cheapest(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy(F.col("dst").alias("id"))
             .agg(F.min(F.col("dist") + F.col("w")).alias("mind"))
         )
-        state = (
-            state.join(m, "id", "left")
-            .select(
-                "id",
-                F.least(
-                    F.col("dist"), F.coalesce(F.col("mind"), F.lit(_SSSP_INF))
-                ).alias("dist"),
-            )
-            .localCheckpoint()
+        return state.join(m, "id", "left").select(
+            "id",
+            F.least(
+                F.col("dist"), F.coalesce(F.col("mind"), F.lit(_SSSP_INF))
+            ).alias("dist"),
         )
-    e.unpersist()
-    return state.filter(F.col("dist") < _SSSP_INF).select(
-        F.col("id").alias("part_id"), F.col("dist").cast("bigint").alias("cost_u")
-    )
+
+    return iterate(state, relax, rounds).filter(F.col("dist") < _SSSP_INF)
 
 
 # ---------------------------------------------------------------------------

@@ -7,13 +7,9 @@ The documents corpus is the Spark-era analogue of the reference's
 pg-*.txt Gutenberg inputs (FIXTURES.md §1.1); tokenization keeps the
 exact wc.go letter-run semantics throughout.
 
-Retention note (ADVICE r16): the lazily-checkpointed shared frames in
-this module (the shingle/pair sources, BPE's initial encoding) are
-not unpersisted inside the query builders — the consuming action runs
-AFTER the builder returns, so no caller boundary exists where an
-unpersist would be safe. Blocks are bounded per query and evicted LRU
-by the block manager; a long-lived session wanting eager release can
-unpersist through the returned frame's lineage or cycle the session.
+The lazily checkpointed shared frames in this module (the shingle/pair
+sources, BPE's initial encoding) follow the retention note in
+``operators/iterate.py``: not unpersisted inside the query builders.
 """
 
 from __future__ import annotations
@@ -1162,8 +1158,8 @@ deg AS (SELECT src AS id, CAST(count(*) AS BIGINT) AS deg FROM e GROUP BY src),
         "sf0.01.) Fixed 10 power-iteration rounds (operators/"
         "pagerank.py): edge list cached pre-partitioned, degree "
         "carried with the rank state so each round is one join+agg, "
-        "lineage localCheckpoint'ed per round, zero driver actions in "
-        "the loop. Hash-checked since round 8: the iteration runs in "
+        "lineage localCheckpoint'ed every third round, zero driver "
+        "actions in the loop. Hash-checked since round 8: the iteration runs in "
         "exact integer micro-units (no floating point in the loop — "
         "see operators/pagerank.py for why the rounded-doubles "
         "variant is unsound), and the oracle replays the identical "

@@ -121,11 +121,12 @@ def stream_dedup_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_dedup,
     )
 
+    n_bytes = source_bytes(sf_dir)
     drained = run_available_now(
         stream_dedup(events_stream(spark, sf_dir, copies=2)),
         "q_stream_dedup_ids",
         output_mode="append",
-        src_bytes=2 * source_bytes(sf_dir),
+        src_bytes=None if n_bytes is None else 2 * n_bytes,
     )
     return drained.select("event_id")
 
@@ -1606,7 +1607,8 @@ def stream_nb_model_swap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the per-batch confusion rollup is classes²-bounded either way
     from tda596_lab02mapreduce_spark.streaming.windows import drain_conf
 
-    with drain_conf(spark, 2 * source_bytes(sf_dir, "documents")):
+    n_bytes = source_bytes(sf_dir, "documents")
+    with drain_conf(spark, None if n_bytes is None else 2 * n_bytes):
         q = (
             stream.writeStream.foreachBatch(handler)
             .queryName("q_stream_nb_model_swap")

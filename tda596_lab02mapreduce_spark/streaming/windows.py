@@ -257,11 +257,15 @@ def record_drain(query_name: str, q) -> None:
     }
 
 
-def source_bytes(sf_dir: str, table: str = "events") -> int:
+def source_bytes(sf_dir: str, table: str = "events") -> int | None:
     """On-disk bytes of the fixture table feeding a drain — the input
-    proxy ``drain_conf`` sizes the state store from."""
+    proxy ``drain_conf`` sizes the state store from. ``None`` for a
+    URI path (``s3a://…``, ``hdfs://…``), which ``drain_conf`` reads
+    as "keep the session setting"."""
     import glob
 
+    if "://" in sf_dir:
+        return None
     p = os.path.join(sf_dir, f"{table}.parquet")
     if os.path.isdir(p):
         return sum(
@@ -292,9 +296,12 @@ class drain_conf:
     the cluster's setting. Batch counts, watermark semantics, and
     per-key grouping are partition-count-independent, so drained
     results are unchanged (the batch-boundary oracles stay green).
-    Env override: SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS. The streaming
-    query CLONES the session conf at start, so restoring the value
-    after the drain cannot affect the finished query."""
+    Env override: SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS (digits, >= 1).
+    The streaming query CLONES the session conf at start, so restoring
+    the value after the drain cannot affect the finished query. The
+    set-and-restore assumes one session used by one thread: a
+    concurrent query on the same session would see the drain's value
+    until ``__exit__``."""
 
     def __init__(self, spark, n_bytes: int | None):
         self._spark = spark
@@ -304,6 +311,11 @@ class drain_conf:
     def __enter__(self):
         env = os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS")
         if env:
+            if not env.isdecimal() or int(env) < 1:
+                raise ValueError(
+                    "SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS must be an integer "
+                    f">= 1, got {env!r}"
+                )
             parts: int | None = int(env)
         elif self._bytes is None:
             parts = None

@@ -9,14 +9,25 @@ from the sf0.001 fixture (into a THROWAWAY model dir, so the committed
 sidecar is never rewritten by the test) and asserts field-for-field
 equality with the committed artifact. NB already self-checks via
 ``refit=True`` in its own tests; these four extend the spot-check to
-the remaining sidecar families.
+the remaining sidecar families. Each test first asserts that the
+committed sidecar file exists: a missing one would make the
+"committed" load silently refit and write a new file into the repo.
 """
 
 from __future__ import annotations
 
+import hashlib
+import os
+
 import pytest
 
 SF = "/root/testdata/sf0.001"
+
+
+def _assert_committed(model_dir: str, family: str, key: tuple) -> None:
+    name = family + "_" + hashlib.sha256(repr(key).encode()).hexdigest()[:16] + ".json"
+    path = os.path.join(model_dir, name)
+    assert os.path.isfile(path), f"committed sidecar missing: {path}"
 
 
 @pytest.fixture
@@ -36,6 +47,7 @@ def test_kmeans_sidecar_matches_refit(spark, tmp_model_dir):
     from tda596_lab02mapreduce_spark.operators import kmeans as km
 
     emb = io.load(spark, SF, "embeddings")
+    _assert_committed(km._model_cache_dir(), "kmeans", (SF, "embedding", 64, 8, 4))
     committed = km.kmeans_fit(emb, dataset_key=SF)
     tmp_model_dir()
     km._KMEANS_MODEL_CACHE.clear()
@@ -49,6 +61,7 @@ def test_pca_sidecar_matches_refit(spark, tmp_model_dir):
     from tda596_lab02mapreduce_spark.operators import pca as pc
 
     emb = io.load(spark, SF, "embeddings")
+    _assert_committed(pc._model_cache_dir(), "pca", (SF, "embedding", 64, 8))
     committed = pc.pca_fit(emb, dataset_key=SF)
     tmp_model_dir()
     pc._PCA_MODEL_CACHE.clear()
@@ -62,6 +75,9 @@ def test_ivf_sidecar_matches_refit(spark, tmp_model_dir):
     from tda596_lab02mapreduce_spark.operators import similarity as sim
 
     emb = io.load(spark, SF, "embeddings")
+    _assert_committed(
+        sim._model_cache_dir(), "ivf", (SF, "embedding", "vec_id", 8, 3, 0.2)
+    )
     committed = sim.ivf_fit(
         emb, n_cells=8, kmeans_iters=3, train_fraction=0.2, dataset_key=SF
     )
@@ -87,6 +103,9 @@ def test_pq_sidecar_matches_refit(spark, tmp_model_dir):
     from tda596_lab02mapreduce_spark.operators import similarity as sim
 
     emb = io.load(spark, SF, "embeddings")
+    _assert_committed(
+        sim._model_cache_dir(), "pq", (SF, "embedding", "vec_id", 16, 16, 8, 4096)
+    )
     committed = sim.pq_fit(
         emb, m=16, k=16, iters=8, n_train=4096, dataset_key=SF
     )

@@ -13,9 +13,11 @@ from pyspark.sql import functions as F
 from tda596_lab02mapreduce_spark import io
 from tda596_lab02mapreduce_spark.streaming.stateful import running_user_stats
 from tda596_lab02mapreduce_spark.streaming.windows import (
+    drain_conf,
     events_stream,
     run_available_now,
     session_agg,
+    source_bytes,
     stream_dedup,
     tumbling_agg,
 )
@@ -781,3 +783,21 @@ def test_stream_nb_model_swap_two_version_drain(spark, sf_correctness):
 
     mf = read_manifest(nb_swap_store_base(sf_correctness))
     assert mf["current"] == 2 and mf["versions"] == [1, 2]
+
+
+@pytest.mark.parametrize("bad", ["0", "-4", "8x", " 8"])
+def test_drain_conf_rejects_bad_partition_env(spark, monkeypatch, bad):
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS", bad)
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    with pytest.raises(ValueError, match="SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS"):
+        with drain_conf(spark, 1024):
+            pass
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+
+
+def test_source_bytes_object_store_path_keeps_session_setting(spark, sf_smoke):
+    assert source_bytes("s3a://bucket/sf0.1") is None
+    assert source_bytes(sf_smoke) > 0
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    with drain_conf(spark, source_bytes("s3a://bucket/sf0.1")):
+        assert spark.conf.get("spark.sql.shuffle.partitions") == before

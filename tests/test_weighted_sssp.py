@@ -12,6 +12,10 @@ from __future__ import annotations
 
 from collections import defaultdict
 
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
+
 from tda596_lab02mapreduce_spark.queries.association import (
     _copurchase_edges,
     graph_weighted_cheapest,
@@ -63,3 +67,20 @@ def test_sssp_matches_python_bellman_ford(spark, sf_smoke):
         if n not in seeds and c < direct[n]
     ]
     assert improved, "every optimum was a direct seed edge — relaxation vacuous"
+
+
+@pytest.mark.parametrize("bad_partkey", [-3, 2**31])
+def test_copurchase_packed_key_rejects_out_of_range_partkey(spark, tmp_path, bad_partkey):
+    # one customer buying the bad part next to a good one emits one
+    # packed pair; the guard must fail loudly instead of colliding
+    pq.write_table(
+        pa.table({"o_orderkey": [1], "o_custkey": [10]}), tmp_path / "orders.parquet"
+    )
+    pq.write_table(
+        pa.table({"l_orderkey": [1, 1], "l_partkey": [bad_partkey, 7]}),
+        tmp_path / "lineitem.parquet",
+    )
+    e = _copurchase_edges(spark, str(tmp_path))
+    with pytest.raises(Exception, match="overflows the packed pair key"):
+        e.count()
+    e.unpersist()
